@@ -125,7 +125,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     import __spark_entry__ as e
-    from mr_mpi_blast_spark.session import get_spark
+    from mr_mpi_blast_spark.session import get_spark, master_cpus
 
     spark = get_spark("bench")
     qs = {k: v for k, v in e.queries().items() if k not in CORRECTNESS_ONLY}
@@ -236,9 +236,9 @@ def main() -> None:
         # echo the parallelism the run ACTUALLY used (r13, VERDICT
         # item 2): an 8-core scaling run is attributable from the JSON
         # alone, and "ignored $SPARK_GRAFT_CPUS" can never again be
-        # inferred from ambiguous ~1.0 timing ratios
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   os.cpu_count() or 4)),
+        # inferred from ambiguous ~1.0 timing ratios. Read off the
+        # session's master: get_spark owns the env-var parse
+        "cpus": master_cpus(spark.sparkContext.master),
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }))

@@ -141,6 +141,11 @@ def _table_profile_exact(df, cols: list[str],
     Values are identical to the Expand form by construction: same
     distinct sets, same native-type min/max ordering, same NULL
     accounting, same HDR bucket counts.
+
+    Level 2 also reads a plan-sized spine — one zero-count, all-NULL
+    row per column — so every column reports even on an EMPTY frame,
+    with the approx path's and the DuckDB oracle's shape: n_rows 0,
+    n_distinct 0, NULL n_nulls/min/max.
     """
     n = len(cols)
     types = {c: f.dataType for c, f in zip(df.schema.names, df.schema.fields)}
@@ -155,15 +160,22 @@ def _table_profile_exact(df, cols: list[str],
             .select("p.*")
             .groupBy("gid", *vcols)
             .agg(F.count(F.lit(1)).alias("cnt")))
+    spine = df.sparkSession.range(n).select(
+        F.col("id").cast("int").alias("gid"),
+        *[F.lit(None).cast(types[c]).alias(f"v{j}")
+          for j, c in enumerate(cols)],
+        F.lit(0).cast("long").alias("cnt"))
     # only the row's own-gid field can be non-null, so "any field
     # non-null" == "this gid's value is non-null" for every row
     import functools
     anynn = functools.reduce(
         lambda x, y: x | y, [F.col(v).isNotNull() for v in vcols])
-    prof = lvl1.groupBy("gid").agg(
+    prof = lvl1.unionByName(spine).groupBy("gid").agg(
         F.sum("cnt").alias("n_rows"),
-        F.coalesce(F.sum(F.when(~anynn, F.col("cnt"))),
-                   F.lit(0)).alias("n_nulls"),
+        # the spine's zero makes this 0 for a column without NULLs;
+        # an empty frame has no NULL count to report
+        F.when(F.sum("cnt") > 0,
+               F.sum(F.when(~anynn, F.col("cnt")))).alias("n_nulls"),
         F.sum(F.when(anynn, 1).otherwise(0)).cast("long")
         .alias("n_distinct"),
         *[F.min(v).alias(f"_mn{j}") for j, v in enumerate(vcols)],
@@ -181,7 +193,9 @@ def _table_profile_exact(df, cols: list[str],
         F.coalesce(*[F.col(f"_mx{j}").cast("string") for j in range(n)])
         .alias("max_val"))
     if not quantile_cols:
-        return base
+        # the level-2 shuffle scrambles gid order: restore the
+        # documented sorted report order (plan-sized, one row/column)
+        return base.orderBy("col_name")
     qarms = " ".join(
         f"WHEN gid = {cols.index(c)} "
         f"THEN {_hdr_profile_bucket(f'v{cols.index(c)}')}"

@@ -11,8 +11,20 @@ default.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def master_cpus(master: str) -> int | None:
+    """Cores a local master honours (``local[N]`` / ``local[N,F]`` ->
+    N, ``local`` -> 1); None when the master string does not say
+    (``local[*]``, a cluster URL). Read it off the session's master to
+    report the parallelism a run actually used."""
+    m = re.fullmatch(r"local\[(\d+)(?:,\s*\d+)?\]", master.strip())
+    if m:
+        return int(m.group(1))
+    return 1 if master.strip() == "local" else None
 
 
 def get_spark(app_name: str = "mr_mpi_blast_spark",

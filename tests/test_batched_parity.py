@@ -1,25 +1,25 @@
-"""Batched-vs-sequential kernel parity.
+"""Block-path-vs-sequential kernel parity.
 
-`_align_protein_batched_arrays` is the DEFAULT blastp execution path
-(hashed index, no -threshold, no -window_size); its contract is
-bit-identical rows, in identical order, to `_align_query_sequential` —
-the readable per-seed loop that serves as the semantic oracle
-(kernel/builtin.py docstrings name these tests). Randomized corpora
-with planted homologies exercise the cases where the two
-implementations could plausibly diverge: multi-seed diagonals
-(coverage dedupe), seeds below min_raw_score (coverage must still
-update), gapped stage-2 convergence dedupe, lowercase query masking,
-and case folding.
+`align_block` is the kernel's only alignment path: it runs a whole
+query block as one sentinel-concatenated batch. Its contract is
+bit-identical rows, in identical order, to `_align_query_sequential`
+(tests/kernel_reference.py) run per query and concatenated in block
+order — the readable per-seed loop that serves as the semantic oracle.
+Randomized corpora with planted homologies exercise the cases where
+the two could plausibly diverge: multi-seed diagonals (coverage
+dedupe), seeds below min_raw_score (coverage must still update),
+gapped stage-2 convergence dedupe, lowercase query masking, case
+folding, neighborhood and two-hit seeding, and both blastn strands.
 """
 
 import numpy as np
 import pytest
 
+from kernel_reference import _align_query_sequential, _extend_rows
 from mr_mpi_blast_spark.config import BlastConfig
-from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex,
-                                               _align_query_sequential,
-                                               _extend_batch, _extend_vec,
-                                               align_query, encode_protein)
+from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _b62_row,
+                                               _extend_batch, align_block,
+                                               encode_protein)
 
 RES20 = "ARNDCQEGHILKMFPSTWYV"
 
@@ -56,31 +56,36 @@ def _corpus(seed: int, n_subjects: int = 8, sub_len: int = 120,
     return subjects, queries
 
 
-def _run_both(subjects, queries, cfg, fold_case=False, lcase=None):
-    idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=True,
+def _norm(rows):
+    return [tuple(x if isinstance(x, str) else int(x) for x in r)
+            for r in rows]
+
+
+def _block_vs_sequential(subjects, queries, cfg, protein,
+                         fold_case=False, lcase=None):
+    idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=protein,
                        fold_case=fold_case)
-    assert idx.hashed, "parity target is the hashed fast path"
-    batched, sequential = [], []
+    if lcase is not None:
+        queries = [(qid, lcase(q)) for qid, q in queries]
+    df = align_block(queries, idx, cfg)
+    got = _norm(df.itertuples(index=False, name=None))
+    exp = []
     for qid, q in queries:
-        if lcase is not None:
-            q = lcase(q)
-        got = align_query(qid, q, idx, cfg)
-        batched.extend(got)
-        sequential.extend(_align_query_sequential(qid, q, idx, cfg))
-    return batched, sequential
+        exp.extend(_align_query_sequential(qid, q, idx, cfg))
+    return got, _norm(exp)
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 @pytest.mark.parametrize("gapped", [False, True])
 def test_batched_parity(seed, gapped):
     """Default blastp config (the flagship blast_pipeline shape):
-    batched rows == sequential rows, exactly, including order."""
+    block rows == sequential rows, exactly, including order."""
     subjects, queries = _corpus(seed)
     cfg = BlastConfig(task="blastp", word_size=4, gapped=gapped)
     assert cfg.threshold is None and not cfg.window_size
-    batched, sequential = _run_both(subjects, queries, cfg)
-    assert batched == sequential
-    assert len(batched) > 0, "corpus must actually produce hits"
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
+    assert got == exp
+    assert got, "corpus must actually produce hits"
 
 
 @pytest.mark.parametrize("seed", [11, 12])
@@ -100,10 +105,10 @@ def test_batched_parity_lcase_masking(seed):
 
     subjects, queries = _corpus(seed)
     cfg = BlastConfig(task="blastp", word_size=4, lcase_masking=True)
-    batched, sequential = _run_both(subjects, queries, cfg,
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True,
                                     fold_case=True, lcase=lcase)
-    assert batched == sequential
-    assert len(batched) > 0
+    assert got == exp
+    assert got
 
 
 def test_batched_parity_min_score_coverage():
@@ -112,14 +117,15 @@ def test_batched_parity_min_score_coverage():
     coverage — the subtlest sequential semantic)."""
     subjects, queries = _corpus(21)
     cfg = BlastConfig(task="blastp", word_size=4, min_score=30)
-    batched, sequential = _run_both(subjects, queries, cfg)
-    assert batched == sequential
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
+    assert got == exp
 
 
 @pytest.mark.parametrize("seed", [31, 32, 33])
 def test_batched_extension_parity(seed):
-    """_extend_batch over N seeds == _extend_vec per seed, on the same
-    volume: gain, extension length, and identity count all match."""
+    """_extend_batch over N seeds == the reference _extend_rows walk
+    per seed, on the same volume: gain, extension extent, and identity
+    count all match."""
     rng = np.random.default_rng(seed)
     subjects = [(f"s{i}", _rand_protein(rng, 150)) for i in range(4)]
     q = _mutate(rng, subjects[1][1][10:130], 0.1)
@@ -148,10 +154,10 @@ def test_batched_extension_parity(seed):
                                        sq + k, gpos + k, +1, xdrop)
     gain_l, ext_l, m_l = _extend_batch(qi_arr, qo, crow, cord,
                                        sq - 1, gpos - 1, -1, xdrop)
+    qrows = [_b62_row(c) for c in q]
     for t, (qpos, si, spos) in enumerate(seeds):
-        so, si_arr2 = idx.encoded[si]
-        score, qs, qe, ss, se, ident = _extend_vec(
-            qo, qi_arr, so, si_arr2, qpos, spos, k, 0, xdrop)
+        score, qs, qe, ss, se, ident = _extend_rows(
+            q, subjects[si][1], qpos, spos, k, qrows, 0, xdrop)
         assert int(gain_r[t] + gain_l[t]) == score, seeds[t]
         assert int(sq[t] - ext_l[t]) == qs
         assert int(sq[t] + k - 1 + ext_r[t]) == qe
@@ -168,9 +174,9 @@ def test_batched_parity_neighborhood(seed, gapped):
                                 n_queries=4, q_len=60)
     cfg = BlastConfig(task="blastp", word_size=3, threshold=11,
                       gapped=gapped)
-    batched, sequential = _run_both(subjects, queries, cfg)
-    assert batched == sequential
-    assert len(batched) > 0
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
+    assert got == exp
+    assert got
 
 
 def test_batched_parity_neighborhood_lcase():
@@ -184,21 +190,21 @@ def test_batched_parity_neighborhood_lcase():
                                 n_queries=4, q_len=60)
     cfg = BlastConfig(task="blastp", word_size=3, threshold=11,
                       lcase_masking=True)
-    batched, sequential = _run_both(subjects, queries, cfg,
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True,
                                     fold_case=True, lcase=lcase)
-    assert batched == sequential
+    assert got == exp
 
 
 @pytest.mark.parametrize("window", [10, 40])
 def test_batched_parity_two_hit(window):
-    """-window_size (two-hit seeding) through the batched path: the
+    """-window_size (two-hit seeding) through the block path: the
     pending-seed scan is replayed with a precomputed next-trigger
     table; rows must match the sequential oracle exactly."""
     subjects, queries = _corpus(61)
     cfg = BlastConfig(task="blastp", word_size=4, window_size=window)
-    batched, sequential = _run_both(subjects, queries, cfg)
-    assert batched == sequential
-    assert batched, "corpus must produce two-hit extensions"
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
+    assert got == exp
+    assert got, "corpus must produce two-hit extensions"
 
 
 def test_batched_parity_two_hit_neighborhood():
@@ -207,13 +213,13 @@ def test_batched_parity_two_hit_neighborhood():
     subjects, queries = _corpus(62, sub_len=90, q_len=60)
     cfg = BlastConfig(task="blastp", word_size=3, threshold=11,
                       window_size=40, min_score=18)
-    batched, sequential = _run_both(subjects, queries, cfg)
-    assert batched == sequential
-    assert batched
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
+    assert got == exp
+    assert got
 
 
 # ---------------------------------------------------------------------------
-# blastn batched path (round 5): both strands, reward/penalty scoring
+# blastn: both strands, reward/penalty scoring
 # ---------------------------------------------------------------------------
 
 NUCS = "ACGT"
@@ -252,21 +258,6 @@ def _corpus_dna(seed: int, n_subjects: int = 8, sub_len: int = 160,
     return subjects, queries
 
 
-def _run_both_dna(subjects, queries, cfg, fold_case=False, lcase=None):
-    idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=False,
-                       fold_case=fold_case)
-    assert idx.hashed
-    batched, sequential = [], []
-    for qid, q in queries:
-        if lcase is not None:
-            q = lcase(q)
-        batched.extend(tuple(map(int, r[:1])) + (r[1],)
-                       + tuple(map(int, r[2:]))
-                       for r in align_query(qid, q, idx, cfg))
-        sequential.extend(_align_query_sequential(qid, q, idx, cfg))
-    return batched, sequential
-
-
 @pytest.mark.parametrize("seed", [1, 2, 3])
 @pytest.mark.parametrize("gapped", [False, True])
 def test_batched_parity_blastn(seed, gapped):
@@ -274,12 +265,11 @@ def test_batched_parity_blastn(seed, gapped):
     cfg = BlastConfig(task="blastn", word_size=8, min_score=12,
                       gapped=gapped,
                       ka_gapped=(1.3, 0.5, 1.0) if gapped else None)
-    batched, sequential = _run_both_dna(subjects, queries, cfg)
-    assert batched == [tuple(r) for r in sequential]
-    assert batched  # corpora are built to hit
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=False)
+    assert got == exp
+    assert got  # corpora are built to hit
     # both strands actually exercised
-    strands = {r[10] for r in batched}
-    assert strands == {1, -1}
+    assert {r[10] for r in got} == {1, -1}
 
 
 @pytest.mark.parametrize("seed", [5, 6])
@@ -288,9 +278,9 @@ def test_batched_parity_blastn_reward_penalty(seed):
     subjects, queries = _corpus_dna(seed)
     cfg = BlastConfig(task="blastn", word_size=8, reward=2, penalty=-3,
                       min_score=20)
-    batched, sequential = _run_both_dna(subjects, queries, cfg)
-    assert batched == [tuple(r) for r in sequential]
-    assert batched
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=False)
+    assert got == exp
+    assert got
 
 
 def test_batched_parity_blastn_lcase_masking():
@@ -301,42 +291,14 @@ def test_batched_parity_blastn_lcase_masking():
 
     cfg = BlastConfig(task="blastn", word_size=8, min_score=12,
                       lcase_masking=True)
-    batched, sequential = _run_both_dna(subjects, queries, cfg,
-                                        lcase=mask)
-    assert batched == [tuple(r) for r in sequential]
+    got, exp = _block_vs_sequential(subjects, queries, cfg, protein=False,
+                                    lcase=mask)
+    assert got == exp
 
 
 # ---------------------------------------------------------------------------
-# Block-level batching: align_block concatenates the WHOLE query block
-# (sentinel-separated, like the volume's cat arrays) and runs seed
-# collection + extension rounds once per task. Its contract is the
-# same bit-identical parity, now at the block level: the emitted
-# DataFrame equals the per-query sequential oracle rows concatenated
-# in block order.
+# Block-shape cases: wider corpora, long words, degenerate blocks
 # ---------------------------------------------------------------------------
-
-from mr_mpi_blast_spark.kernel.builtin import align_block  # noqa: E402
-
-
-def _norm(rows):
-    return [tuple(x if isinstance(x, str) else int(x) for x in r)
-            for r in rows]
-
-
-def _block_vs_sequential(subjects, queries, cfg, protein,
-                         fold_case=False, lcase=None):
-    idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=protein,
-                       fold_case=fold_case)
-    assert idx.hashed, "block batching is the hashed-path contract"
-    if lcase is not None:
-        queries = [(qid, lcase(q)) for qid, q in queries]
-    df = align_block(queries, idx, cfg)
-    got = _norm(df.itertuples(index=False, name=None))
-    exp = []
-    for qid, q in queries:
-        exp.extend(_align_query_sequential(qid, q, idx, cfg))
-    return got, _norm(exp)
-
 
 @pytest.mark.parametrize("seed", [41, 42, 43])
 @pytest.mark.parametrize("gapped", [False, True])

@@ -14,7 +14,7 @@ from mr_mpi_blast_spark.kernel import ncbi
 from mr_mpi_blast_spark.kernel.builtin import (KA_BLOSUM62, KA_NUCL_1_2,
                                                blosum62_score,
                                                karlin_altschul_bitscore,
-                                               pair_scorer, scoring_params)
+                                               scoring_params)
 
 # spot values straight from the published BLOSUM62 table
 #   (Henikoff & Henikoff 1992; NCBI data/BLOSUM62)
@@ -54,13 +54,6 @@ def test_bitscore_formula_blastp():
     want = (0.3176 * 100 - math.log(0.134)) / math.log(2.0)
     assert bit == pytest.approx(want, rel=1e-12)
     assert bit == pytest.approx(48.7197, abs=5e-4)
-
-
-def test_pair_scorer_dispatch():
-    sp = pair_scorer(BlastConfig(task="blastp"))
-    sn = pair_scorer(BlastConfig(task="blastn", reward=2, penalty=-3))
-    assert sp("A", "A") == 4 and sp("A", "R") == -1
-    assert sn("A", "A") == 2 and sn("A", "C") == -3
 
 
 def test_blastp_self_alignment_scores_diagonal(spark):
@@ -108,17 +101,24 @@ def test_blastp_bitscore_matches_ncbi(spark):      # pragma: no cover
 
 
 def test_vectorized_extension_equals_sequential():
-    """The numpy X-drop extension is semantics-identical to the
-    sequential walk (first-maximum ties, strict improvement, drop
-    break) — including across chunk boundaries."""
+    """The batched numpy X-drop extension (_extend_batch) is
+    semantics-identical to the reference sequential walk (first-maximum
+    ties, strict improvement, drop break) on odd alphabets (lowercase,
+    punctuation, chars outside BLOSUM62) — including across chunk
+    boundaries. Every random (query, subject, seed) trial joins one
+    batch, each side sentinel-separated the way align_block lays out
+    a query block and a volume."""
     import random
 
-    from mr_mpi_blast_spark.kernel.builtin import (_extend_dir,
-                                                   _extend_rows,
-                                                   _extend_vec, _b62_row,
+    import numpy as np
+
+    from kernel_reference import _extend_rows
+    from mr_mpi_blast_spark.kernel.builtin import (_B62_SENT, _b62_row,
+                                                   _extend_batch,
                                                    encode_protein)
     rng = random.Random(7)
     alpha = "ARNDCQEGHILKMFPSTWYVBZX abcdefg!?"
+    trials, want = [], []
     for _ in range(800):
         n = rng.randint(20, 300)
         q = "".join(rng.choice(alpha) for _ in range(n))
@@ -132,15 +132,38 @@ def test_vectorized_extension_equals_sequential():
         xdrop = rng.choice([5, 20, 100, 2000])
         qrows = [_b62_row(c) for c in q]
         seed = sum(qrows[qpos + i][q[qpos + i]] for i in range(k))
-        a = _extend_rows(q, s, qpos, spos, k, qrows, seed, xdrop)
-        qo, qi = encode_protein(q)
-        so, si = encode_protein(s)
-        assert a == _extend_vec(qo, qi, so, si, qpos, spos, k, seed, xdrop)
-        # the hybrid (sequential prefix -> numpy handoff) used by the
-        # kernel must agree too
-        assert a == _extend_vec(qo, qi, so, si, qpos, spos, k, seed,
-                                xdrop, q=q, s=s, qrows=qrows)
+        trials.append((q, s, qpos, spos, k, seed, xdrop))
+        want.append(_extend_rows(q, s, qpos, spos, k, qrows, seed, xdrop))
+
+    def cat(seqs):
+        ords, rows, offs, cursor = [], [], [], 0
+        for x in seqs:
+            o, r = encode_protein(x)
+            ords += [o, np.array([-1], dtype=np.int32)]
+            rows += [r, np.array([_B62_SENT])]
+            offs.append(cursor)
+            cursor += len(x) + 1
+        return np.concatenate(ords), np.concatenate(rows), np.array(offs)
+
+    qo, qi, qoff = cat([t[0] for t in trials])
+    so, si, soff = cat([t[1] for t in trials])
+    qpos, spos, k, seed, xdrops = (np.array([t[j] for t in trials])
+                                   for j in range(2, 7))
+    for chunks in ({}, {"chunk": 3, "chunk_max": 3}):
         # tiny chunks stress the cross-chunk best/drop carry
-        gain, ext = _extend_dir(qi[qpos + k:], si[spos + k:], xdrop, chunk=3)
-        gain2, ext2 = _extend_dir(qi[qpos + k:], si[spos + k:], xdrop)
-        assert (gain, ext) == (gain2, ext2)
+        got = []
+        for xd in np.unique(xdrops):
+            sel = np.flatnonzero(xdrops == xd)
+            q0, g0 = qoff[sel] + qpos[sel], soff[sel] + spos[sel]
+            gr, er, mr = _extend_batch(qi, qo, si, so, q0 + k[sel],
+                                       g0 + k[sel], +1, int(xd), **chunks)
+            gl, el, ml = _extend_batch(qi, qo, si, so, q0 - 1, g0 - 1, -1,
+                                       int(xd), **chunks)
+            qs = qpos[sel] - el
+            qe = qpos[sel] + k[sel] - 1 + er
+            ss = spos[sel] - el
+            got += list(zip(sel.tolist(), zip(
+                (seed[sel] + gr + gl).tolist(), qs.tolist(), qe.tolist(),
+                ss.tolist(), (ss + qe - qs).tolist(),
+                (k[sel] + mr + ml).tolist())))
+        assert [g for _, g in sorted(got)] == want, chunks

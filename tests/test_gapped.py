@@ -1,12 +1,12 @@
 """Gapped (affine) extension: exact-arithmetic checks of the Gotoh DP
-and the stage-2 hookup in align_query. No Spark session needed."""
+and the stage-2 hookup in align_block. No Spark session needed."""
 import dataclasses
 
 import pytest
 
 from mr_mpi_blast_spark.config import BlastConfig
 from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _B62, _B62_IDX,
-                                               align_query, gotoh_local)
+                                               align_block, gotoh_local_batch)
 
 # 20 distinct residues inside the BLOSUM62 alphabet
 RES = "ARNDCQEGHILKMFPSTWYV"
@@ -16,8 +16,18 @@ def _self_score(s: str) -> int:
     return int(sum(_B62[_B62_IDX[ord(c)], _B62_IDX[ord(c)]] for c in s))
 
 
+def _gotoh_one(a, b, *scoring):
+    """The production DP on a single window."""
+    return gotoh_local_batch([(a, b)], *scoring)[0]
+
+
+def _hits(q, idx, cfg):
+    return list(align_block([(1, q)], idx, cfg).itertuples(index=False,
+                                                          name=None))
+
+
 def test_gotoh_exact_match_is_ungapped():
-    score, a0, a1, b0, b1, ident, gaps, aln = gotoh_local(
+    score, a0, a1, b0, b1, ident, gaps, aln = _gotoh_one(
         RES, RES, True, 1, -2, 11, 1)
     assert (score, ident, gaps, aln) == (_self_score(RES), 20, 0, 20)
     assert (a0, a1, b0, b1) == (0, 19, 0, 19)
@@ -28,7 +38,7 @@ def test_gotoh_single_insertion_exact_arithmetic():
     alignment bridges it with a length-1 gap costing open+extend."""
     a = RES
     b = RES[:10] + "W" + RES[10:]
-    score, a0, a1, b0, b1, ident, gaps, aln = gotoh_local(
+    score, a0, a1, b0, b1, ident, gaps, aln = _gotoh_one(
         a, b, True, 1, -2, 11, 1)
     assert score == _self_score(RES) - (11 + 1)
     assert (ident, gaps, aln) == (20, 1, 21)
@@ -40,7 +50,7 @@ def test_gotoh_gap_extension_linear_in_length():
     a = RES
     for glen in (1, 2, 3):
         b = RES[:10] + "W" * glen + RES[10:]
-        score, *_rest, gaps, aln = gotoh_local(a, b, True, 1, -2, 11, 1)
+        score, *_rest, gaps, aln = _gotoh_one(a, b, True, 1, -2, 11, 1)
         assert score == _self_score(RES) - (11 + glen)
         assert gaps == glen and aln == 20 + glen
 
@@ -48,7 +58,7 @@ def test_gotoh_gap_extension_linear_in_length():
 def test_gotoh_blastn_scoring():
     a = "ACGTACGTACGTACGTACGT"
     b = a[:10] + "T" + a[10:]
-    score, *_rest, ident, gaps, aln = gotoh_local(a, b, False, 1, -2, 5, 2)
+    score, *_rest, ident, gaps, aln = _gotoh_one(a, b, False, 1, -2, 5, 2)
     assert score == 20 - (5 + 2)
     assert (ident, gaps, aln) == (20, 1, 21)
 
@@ -58,7 +68,7 @@ def test_gotoh_prefers_mismatch_over_expensive_gap():
     gap: one mismatch (-2 vs ~-7 for open+ext) wins."""
     a = "ACGTACGTACGTACGTACGT"
     b = a[:10] + "T" + a[11:]      # substitution, same length
-    score, *_rest, ident, gaps, aln = gotoh_local(a, b, False, 1, -2, 5, 2)
+    score, *_rest, ident, gaps, aln = _gotoh_one(a, b, False, 1, -2, 5, 2)
     assert gaps == 0 and aln == 20
     assert score == 19 - 2 and ident == 19
 
@@ -71,7 +81,7 @@ def test_align_query_gapped_bridges_insertion():
     cfg = BlastConfig(task="blastp", word_size=8, gapped=True,
                       min_score=10, max_kmer_hits=64)
     idx = SubjectIndex([("s1", s)], 8, 64, protein=True)
-    hits = align_query(1, q, idx, cfg)
+    hits = _hits(q, idx, cfg)
     best = max(hits, key=lambda h: h[2])
     score, align_len, ident, gaps = best[2], best[3], best[4], best[5]
     assert gaps == 1 and align_len == 41 and ident == 40
@@ -86,7 +96,7 @@ def test_align_query_default_stays_ungapped():
     s = RES + "W" + RES
     cfg = BlastConfig(task="blastp", word_size=8, min_score=10)
     idx = SubjectIndex([("s1", s)], 8, 64, protein=True)
-    hits = align_query(1, q, idx, cfg)
+    hits = _hits(q, idx, cfg)
     assert hits and all(h[5] == 0 for h in hits)   # gaps column all 0
 
 
@@ -173,10 +183,11 @@ def test_gotoh_vectorized_equals_scalar_reference():
     exactly — score, coordinates, identity/gap counts — on random
     protein and DNA pairs with planted homologies, across gap costs."""
     import numpy as np
-    from mr_mpi_blast_spark.kernel.builtin import (_gotoh_local_scalar,
-                                                   gotoh_local)
+
+    from kernel_reference import _gotoh_local_scalar
     rng = np.random.default_rng(11)
     RES = "ARNDCQEGHILKMFPSTWYV"
+    by_scheme: dict = {}
     for t in range(150):
         protein = t % 2 == 0
         alpha = RES if protein else "ACGT"
@@ -187,23 +198,27 @@ def test_gotoh_vectorized_equals_scalar_reference():
             b = a[2:min(la, 40)] + b[:20]      # shared block -> gaps
         go = int(rng.integers(1, 12))
         ge = int(rng.integers(1, 4))
-        assert gotoh_local(a, b, protein, 1, -2, go, ge) == \
-            _gotoh_local_scalar(a, b, protein, 1, -2, go, ge), (a, b)
+        by_scheme.setdefault((protein, go, ge), []).append((a, b))
+    for (protein, go, ge), pairs in by_scheme.items():
+        got = gotoh_local_batch(pairs, protein, 1, -2, go, ge)
+        for (a, b), g in zip(pairs, got):
+            assert g == _gotoh_local_scalar(a, b, protein, 1, -2, go, ge), \
+                (a, b)
 
 
 @pytest.mark.slow
 def test_gotoh_batch_equals_per_window():
     """The cross-window batched forward sweep (gotoh_local_batch) must
-    be bit-identical to per-window gotoh_local — scores, coordinates,
-    identity/gap counts, and the row-major first-maximal tie-break —
-    for mixed-size batches, empty strings, protein and DNA alphabets,
-    and both gap-cost regimes. Also pins the tile split (batches
-    larger than one tile) and gapped_extend_batch's pad ladder."""
+    be bit-identical to the per-cell reference on every window —
+    scores, coordinates, identity/gap counts, and the row-major
+    first-maximal tie-break — for mixed-size batches, empty strings,
+    protein and DNA alphabets, and both gap-cost regimes. Also pins
+    the tile split (batches larger than one tile) and
+    gapped_extend_batch's pad ladder against the per-HSP one."""
     import numpy as np
-    from mr_mpi_blast_spark.kernel.builtin import (gapped_extend,
-                                                   gapped_extend_batch,
-                                                   gotoh_local,
-                                                   gotoh_local_batch)
+
+    from kernel_reference import _gotoh_local_scalar, gapped_extend
+    from mr_mpi_blast_spark.kernel.builtin import gapped_extend_batch
     rng = np.random.default_rng(23)
     RES = "ARNDCQEGHILKMFPSTWYV"
     for protein, (go, ge) in [(True, (11, 1)), (False, (5, 2))]:
@@ -221,7 +236,7 @@ def test_gotoh_batch_equals_per_window():
                 b = "".join(rng.choice(alpha, size=int(rng.integers(0, 150))))
             pairs.append((a, b))
         got = gotoh_local_batch(pairs, protein, rew, pen, go, ge)
-        want = [gotoh_local(a, b, protein, rew, pen, go, ge)
+        want = [_gotoh_local_scalar(a, b, protein, rew, pen, go, ge)
                 for a, b in pairs]
         assert got == want
 

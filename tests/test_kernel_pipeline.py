@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_mpi_blast_spark.config import BlastConfig
-from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, align_query,
+from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, align_block,
                                                karlin_altschul_evalue, revcomp)
 from mr_mpi_blast_spark.plans.pipeline import attach_deflines, run_search
 
@@ -133,7 +133,7 @@ def test_kernel_mutation_identity():
     subj = _seq(100, salt=4) + "".join(mutated) + _seq(100, salt=5)
     idx = SubjectIndex([("m", subj)], word_size=11, max_kmer_hits=64)
     cfg = BlastConfig(word_size=11, xdrop=50)
-    out = align_query(7, q, idx, cfg)
+    out = align_block([(7, q)], idx, cfg).itertuples(index=False, name=None)
     best = max(out, key=lambda t: t[2])
     qid, sid, score, alen, ident, gaps, qs, qe, ss, se, qstr, sstr, qlen = best
     assert alen > 150
@@ -210,10 +210,10 @@ def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
     assert calls["n"] == 1
     cfg = B.BlastConfig(word_size=8)   # must match the index's k
     q = ("ACGTACGTACGTACGT")
-    h1 = B.align_query(1, q, idx1, cfg)
-    h2 = B.align_query(1, q, idx2, cfg)
-    assert [tuple(r) for r in h1] == [tuple(r) for r in h2]
-    assert h1  # the query does hit
+    h1 = B.align_block([(1, q)], idx1, cfg)
+    h2 = B.align_block([(1, q)], idx2, cfg)
+    assert h1.equals(h2)
+    assert len(h1)  # the query does hit
 
     # corrupt pickle -> silent rebuild (cache is never a failure mode)
     pkls[0].write_bytes(b"not a pickle")
@@ -221,8 +221,7 @@ def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
     idx3 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
                                     disk_cache=True)
     assert calls["n"] == 2
-    assert [tuple(r) for r in B.align_query(1, q, idx3, cfg)] == \
-        [tuple(r) for r in h1]
+    assert B.align_block([(1, q)], idx3, cfg).equals(h1)
 
     # nonce-keyed callers never touch disk
     B._DB_CACHE.clear()

@@ -12,9 +12,9 @@ import dataclasses
 import pandas as pd
 import pytest
 
+from kernel_reference import word_is_lowercase_masked
 from mr_mpi_blast_spark.config import BlastConfig
-from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, align_query,
-                                               word_is_lowercase_masked,
+from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, align_block,
                                                word_low_complexity)
 
 CFG = BlastConfig(task="blastn", word_size=8, xdrop=20, min_score=8)
@@ -26,7 +26,8 @@ def _hits(cfg, query, subjects):
                        complexity=cfg.complexity_filter,
                        protein=cfg.task == "blastp",
                        fold_case=cfg.mask_fold_case)
-    return align_query(1, query, idx, cfg)
+    return list(align_block([(1, query)], idx, cfg).itertuples(
+        index=False, name=None))
 
 
 UNIQ = "ACGTTGACCTGATCGATACGGATCCATG"  # no low-complexity words
@@ -182,7 +183,6 @@ def test_masked_hashed_index_equals_reference_build(seed, protein):
     for soft, comp in [(True, False), (False, True), (True, True)]:
         idx = SubjectIndex(subs, k, 64, soft_mask=soft, complexity=comp,
                            protein=protein)
-        assert idx.hashed
         ref: dict = {}
         for si, (_, seq) in enumerate(subs):
             for pos in range(len(seq) - k + 1):
@@ -208,7 +208,6 @@ def test_fold_case_length_preserving_multichar_upper():
     assert len(fold_case_str("ARNDßCQEG")) == 9
     idx = SubjectIndex([("s0", "ARNDßCQEG"), ("s1", "arndcqeg")], 3, 64,
                        soft_mask=True, protein=True, fold_case=True)
-    assert idx.hashed
     # s1 is fully lowercase -> every word soft-masked out; s0's
     # eszett is ITSELF lowercase, so its windows are soft-masked too
     # (the scalar predicate agrees: word_is_lowercase_masked('NDß'))

@@ -14,10 +14,16 @@ import numpy as np
 
 from mr_mpi_blast_spark.config import BlastConfig, apply_blast_cli_opts
 from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _B62, _B62_IDX,
-                                               align_query,
+                                               align_block,
                                                neighborhood_words)
 
 RES20 = "ARNDCQEGHILKMFPSTWYV"
+
+
+def _query_hits(qid, q, idx, cfg):
+    """One query's RAW_HITS rows through the block path."""
+    return list(align_block([(qid, q)], idx, cfg).itertuples(index=False,
+                                                            name=None))
 
 
 def _score(a: str, b: str) -> int:
@@ -67,8 +73,8 @@ def test_threshold_seeds_homology_exact_seeding_misses():
     nb_cfg = BlastConfig(task="blastp", word_size=3, min_score=15,
                          threshold=11)
     idx = SubjectIndex([("s1", s)], 3, 64, protein=True)
-    assert align_query(1, q, idx, exact_cfg) == []
-    hits = align_query(1, q, idx, nb_cfg)
+    assert _query_hits(1, q, idx, exact_cfg) == []
+    hits = _query_hits(1, q, idx, nb_cfg)
     assert hits
     best = max(hits, key=lambda h: h[2])
     # full diagonal: score = 5 * (B62[C][A] + B62[W][W] + B62[Y][Y])
@@ -86,7 +92,7 @@ def test_threshold_seed_identity_counts_mismatched_seed():
     s = "WCN"
     cfg = BlastConfig(task="blastp", word_size=3, min_score=5, threshold=11)
     idx = SubjectIndex([("s1", s)], 3, 64, protein=True)
-    hits = align_query(1, q, idx, cfg)
+    hits = _query_hits(1, q, idx, cfg)
     assert len(hits) == 1
     h = hits[0]
     assert h[2] == 21 and h[4] == 2 and h[3] == 3   # score, ident, align_len
@@ -98,7 +104,7 @@ def test_threshold_none_is_exact_word_seeding():
     q = "CWY" * 5
     s = "AWY" * 5
     idx = SubjectIndex([("s1", s)], 3, 64, protein=True)
-    assert align_query(1, q, idx,
+    assert _query_hits(1, q, idx,
                        BlastConfig(task="blastp", word_size=3,
                                    min_score=15)) == []
 
@@ -108,8 +114,8 @@ def test_threshold_ignored_for_blastn():
     not perturb blastn."""
     q = "ACGTACGTACGTACGTACGT"
     idx = SubjectIndex([("s1", q)], 11, 64, protein=False)
-    base = align_query(1, q, idx, BlastConfig(task="blastn", word_size=11))
-    with_t = align_query(1, q, idx, BlastConfig(task="blastn", word_size=11,
+    base = _query_hits(1, q, idx, BlastConfig(task="blastn", word_size=11))
+    with_t = _query_hits(1, q, idx, BlastConfig(task="blastn", word_size=11,
                                                 threshold=11))
     assert base == with_t and base
 
@@ -120,24 +126,25 @@ def test_threshold_cli_passthrough():
     assert cfg.threshold == 11 and cfg.word_size == 3
 
 
+def _nb_entries(idx, word, t):
+    arrs = idx.neighborhood_arrays(word, t)
+    return set() if arrs is None else set(zip(*(a.tolist() for a in arrs)))
+
+
 def test_neighborhood_hits_dict_and_hashed_forms_agree():
     """Neighborhood candidates from the masked index (complexity
     filter on — low-complexity words dropped at build time) must be a
-    subset of the unmasked index's, with identical entries for every
-    word both forms keep. Both forms are hashed since the masked build
-    went vectorized."""
+    subset of the unmasked index's, with identical (si, spos, score,
+    ident) entries for every word both forms keep; and the unmasked
+    candidates equal a brute-force scan of the string-keyed view."""
     rng = np.random.default_rng(7)
     s = "".join(rng.choice(list(RES20), 200))
-    hashed = SubjectIndex([("s1", s)], 3, 64, protein=True)
-    dicted = SubjectIndex([("s1", s)], 3, 64, protein=True,
-                          complexity=True)   # masked build
-    assert hashed.hashed and dicted.hashed
+    plain = SubjectIndex([("s1", s)], 3, 64, protein=True)
+    masked = SubjectIndex([("s1", s)], 3, 64, protein=True,
+                          complexity=True)
     for word in ("WCH", "AKE", "LIV"):
-        h1 = sorted((tuple(sorted(h)), sc, idn)
-                    for h, sc, idn in hashed.neighborhood_hits(word, 11))
-        # dict form drops low-complexity words from the index; compare
-        # only words both forms index
-        h2 = sorted((tuple(sorted(h)), sc, idn)
-                    for h, sc, idn in dicted.neighborhood_hits(word, 11))
-        for entry in h2:
-            assert entry in h1
+        h1 = _nb_entries(plain, word, 11)
+        assert h1 == {(si, sp, sc, sum(a == b for a, b in zip(word, w2)))
+                      for w2, sc in _brute_neighborhood(word, 11).items()
+                      for si, sp in plain.index.get(w2, [])}
+        assert _nb_entries(masked, word, 11) <= h1

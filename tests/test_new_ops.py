@@ -6,6 +6,7 @@ chains need diameter > 2 to exercise convergence)."""
 
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -197,6 +198,52 @@ def test_table_profile_exact_counts_and_validation(spark):
         table_profile(df, ["nope"])
     with _pytest.raises(ValueError):
         table_profile(df, [])
+
+
+@pytest.mark.parametrize("parts", [3, 7])
+def test_table_profile_exact_rows_sorted_any_partitioning(spark, parts):
+    """The exact path's report order is the sorted column-name order
+    under any shuffle partitioning, not an accident of how the
+    level-2 groupBy hashes the column ids (3 and 7 partitions both
+    scramble them without the final sort)."""
+    from mr_mpi_blast_spark.operators.profile import table_profile
+
+    cols = [f"c{i:02d}" for i in range(12)]
+    df = spark.createDataFrame(
+        [tuple(range(r, r + 12)) for r in range(20)],
+        ", ".join(f"{c} long" for c in cols))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        got = [r.col_name for r in table_profile(df).collect()]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got == cols
+
+
+def test_table_profile_empty_frame_shape(spark):
+    """An empty frame profiles to one row per column on BOTH paths,
+    with the DuckDB oracle's shape: n_rows 0, n_distinct 0, and NULL
+    n_nulls / min / max / quantile estimates."""
+    from mr_mpi_blast_spark.operators.profile import table_profile
+
+    df = spark.createDataFrame([], "a long, s string")
+    want = [(c, 0, None, 0, None, None, None) for c in ("a", "s")]
+    for exact in (True, False):
+        got = [tuple(r) for r in table_profile(
+            df, exact=exact, quantile_cols=["a"],
+            qs_permille=(500,)).collect()]
+        assert got == want, exact
+        plain = [tuple(r) for r in table_profile(df, exact=exact).collect()]
+        assert plain == [w[:6] for w in want], exact
+    # one non-nullable column, empty and not
+    ids = spark.range(5)
+    for exact in (True, False):
+        assert [tuple(r) for r in table_profile(
+            ids.filter("id < 0"), exact=exact).collect()] == \
+            [("id", 0, None, 0, None, None)]
+    assert [tuple(r) for r in table_profile(ids).collect()] == \
+        [("id", 5, 0, 5, "0", "4")]
 
 
 def test_ccnet_buckets_ordering_and_sizes(spark):

@@ -1,7 +1,8 @@
 """Hypothesis property tests over the pure (Spark-free) kernel and
 codec layers — the invariants that must hold for EVERY input, not just
-the corpus fixtures: seeding-index equivalence, hash-scheme
-consistency, strand involution, and Karlin-Altschul monotonicity."""
+the corpus fixtures: seeding-index equivalence, block-path vs
+sequential-oracle parity, hash-scheme consistency, strand involution,
+and Karlin-Altschul monotonicity."""
 
 import pytest
 import math
@@ -12,7 +13,7 @@ from hypothesis import strategies as st
 
 from mr_mpi_blast_spark.config import BlastConfig
 from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _window_hashes,
-                                               _HASH_P, align_query,
+                                               _HASH_P, align_block,
                                                karlin_altschul_bitscore,
                                                karlin_altschul_evalue,
                                                revcomp)
@@ -66,21 +67,6 @@ def test_hashed_index_equals_dict_index(seqs, k, cap):
     assert fast.index == _reference_index(subjects, k, cap)
 
 
-@given(_DNA, st.lists(_DNA, min_size=1, max_size=4))
-@settings(max_examples=30, deadline=None)
-def test_align_results_identical_across_index_forms(q, seqs):
-    cfg = BlastConfig(task="blastn", word_size=4, min_score=4)
-    subjects = [(f"s{i}", s) for i, s in enumerate(seqs)]
-    fast = SubjectIndex(subjects, 4, 128)
-    # force the sequential dict route: hashed off + reference mapping
-    # (the per-word dict build is no longer a production path, but the
-    # sequential oracle still knows how to walk one)
-    slow = SubjectIndex(subjects, 4, 128)
-    slow.hashed = False
-    slow._str_index = _reference_index(subjects, 4, 128)
-    assert align_query(1, q, fast, cfg) == align_query(1, q, slow, cfg)
-
-
 @given(st.integers(1, 500), st.integers(2, 499))
 def test_bitscore_and_evalue_monotone_in_score(s1, delta):
     """Higher raw score -> higher bitscore and lower (or equal)
@@ -100,9 +86,8 @@ def test_gotoh_invariants_and_symmetry(a, b):
     """Affine SW invariants for any inputs: bounded counts, and the
     optimal SCORE is symmetric under operand swap (BLOSUM62 is a
     symmetric matrix; tie-broken paths may differ, the score cannot)."""
-    from mr_mpi_blast_spark.kernel.builtin import gotoh_local
-    s1 = gotoh_local(a, b, True, 1, -2, 11, 1)
-    s2 = gotoh_local(b, a, True, 1, -2, 11, 1)
+    from mr_mpi_blast_spark.kernel.builtin import gotoh_local_batch
+    s1, s2 = gotoh_local_batch([(a, b), (b, a)], True, 1, -2, 11, 1)
     score, a0, a1, b0, b1, ident, gaps, aln = s1
     assert score >= 0 and s2[0] == score
     assert 0 <= ident <= aln and 0 <= gaps <= aln
@@ -179,22 +164,25 @@ def test_equal_count_packing_pathological():
 @settings(max_examples=40, deadline=None)
 def test_blastn_batched_equals_sequential(subject_seqs, query_seqs, k,
                                           gapped):
-    """The batched blastn path must emit byte-identical rows, in
-    identical order, to the sequential per-seed oracle for ANY DNA
-    corpus — both strands, mixed case, arbitrary word size, gapped or
-    not."""
-    from mr_mpi_blast_spark.kernel.builtin import _align_query_sequential
+    """The block-batched blastn path must emit byte-identical rows, in
+    identical order, to the sequential per-seed oracle concatenated per
+    query for ANY DNA corpus — both strands, mixed case, arbitrary word
+    size, gapped or not."""
+    from kernel_reference import _align_query_sequential
     subjects = [(f"s{i}", s) for i, s in enumerate(subject_seqs)]
     cfg = BlastConfig(task="blastn", word_size=k, min_score=k,
                       gapped=gapped,
                       ka_gapped=(1.3, 0.5, 1.0) if gapped else None)
     idx = SubjectIndex(subjects, k, 4096, protein=False)
-    assert idx.hashed
-    for qid, q in enumerate(query_seqs):
-        got = [tuple(int(v) if not isinstance(v, str) else v for v in r)
-               for r in align_query(qid, q, idx, cfg)]
-        ref = [tuple(r) for r in _align_query_sequential(qid, q, idx, cfg)]
-        assert got == ref
+    queries = list(enumerate(query_seqs))
+    got = [tuple(v if isinstance(v, str) else int(v) for v in r)
+           for r in align_block(queries, idx, cfg).itertuples(
+               index=False, name=None)]
+    ref = []
+    for qid, q in queries:
+        ref.extend(tuple(r) for r in
+                   _align_query_sequential(qid, q, idx, cfg))
+    assert got == ref
 
 
 @given(st.text(alphabet=st.characters(min_codepoint=32,
@@ -243,14 +231,12 @@ def test_blastp_block_equals_sequential(subject_seqs, query_seqs, k,
     per-seed oracle concatenated per query — for ANY protein corpus,
     mixed case with fold_case + lcase_masking on, gapped or not,
     one-hit or two-hit seeding."""
-    from mr_mpi_blast_spark.kernel.builtin import (_align_query_sequential,
-                                                   align_block)
+    from kernel_reference import _align_query_sequential
     subjects = [(f"s{i}", s) for i, s in enumerate(subject_seqs)]
     cfg = BlastConfig(task="blastp", word_size=k, min_score=k,
                       gapped=gapped, lcase_masking=True,
                       window_size=20 if two_hit else None)
     idx = SubjectIndex(subjects, k, 4096, protein=True, fold_case=True)
-    assert idx.hashed
     queries = list(enumerate(query_seqs))
     df = align_block(queries, idx, cfg)
     got = [tuple(v if isinstance(v, str) else int(v) for v in r)
