@@ -2190,17 +2190,15 @@ def _blast_raw(spark, sf_dir, cfg=None, qmod: int = 25,
     vol_key = _blast_volume_key(sf_dir)
     if variant != "text":
         vol_key += f"|{variant}"
-    # seed_prune on for every registered kernel run (r11): the
-    # work-item runtime filter is value-identical BY CONTRACT
-    # (plans/pipeline.py; one-sided, both strands probed), so the
-    # driver's hash-checked rows double as end-to-end evidence the
-    # filter never drops a hit. On this corpus (queries drawn from
-    # the subjects) nothing is prunable — the point recorded here is
-    # soundness; the skip payoff is pinned by the disjoint-volume
-    # test.
-    raw, dbsize, n_seqs = run_kernel_raw(
-        queries_df, subjects, cfg,
-        cache_key=vol_key, seed_prune=True)
+    # every registered kernel run goes through the work-item runtime
+    # filter, value-identical BY CONTRACT (plans/pipeline.py;
+    # one-sided, both strands probed), so the oracle-checked blast_*
+    # rows double as end-to-end evidence the filter never drops a hit.
+    # On this corpus (queries drawn from the subjects) nothing is
+    # prunable — the point recorded here is soundness; the skip payoff
+    # is pinned by the disjoint-volume test.
+    raw, dbsize, n_seqs = run_kernel_raw(queries_df, subjects, cfg,
+                                         cache_key=vol_key)
     raw.write.mode("overwrite").parquet(cache_dir)
     # meta is written atomically (temp + os.replace) AFTER _SUCCESS
     # exists; reuse requires both, so neither a half-written dir nor a

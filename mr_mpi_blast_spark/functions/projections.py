@@ -1,4 +1,6 @@
-"""Hit projections P1-P10 (SURVEY §2.3) as column expressions.
+"""Hit projections P1-P9 (SURVEY §2.3) as column expressions (P10,
+the converters' %.3g float printing, lives in the CSV sink,
+sinks/writers.py).
 
 All of these are scalar derivations the reference computes row-by-row
 inside its reduce callback (mrblast.cpp:933-1147); here they are
@@ -87,9 +89,3 @@ def project_hits(raw: DataFrame, dbsize: int,
         else F.lit(None).cast("double").alias("perc_cover"),
     )
     return out
-
-
-def format_g3(col: Column) -> Column:
-    """P10: converters print floats as %.3g (load_csv.py:144-147) —
-    used only in the CSV sink."""
-    return F.format_string("%.3g", col)

@@ -286,7 +286,7 @@ RAW_HITS = StructType([
 
 _COMPLEMENT = str.maketrans("ACGTacgt", "TGCAtgca")
 
-# S7: per-worker subject index cache, keyed by (db_part, generation).
+# S7: per-worker subject index cache, keyed by index_cache_key.
 _DB_CACHE: dict = {}
 
 
@@ -454,8 +454,9 @@ class SubjectIndex:
     """k-mer -> [(subject_idx, pos)...] over one DB partition.
 
     The volume's concatenated encodings (``cat_protein`` /
-    ``cat_nucl``) are built lazily on first search, so each index pays
-    only for the alphabet it is searched with.
+    ``cat_nucl``) are lazy properties — build_index materializes only
+    the one its task's alphabet uses, so each index pays only for the
+    alphabet it is searched with.
 
     soft_mask drops seed words overlapping lowercase (masked) subject
     regions; complexity drops low-complexity words (F3 -dust/-seg
@@ -751,15 +752,44 @@ class SubjectIndex:
         return self._cat_nucl
 
 
-def index_cache_key(cache_key: str, word_size: int, max_kmer_hits: int,
-                    soft_mask: bool = False, complexity: bool = False,
-                    protein: bool = False, fold_case: bool = False) -> tuple:
-    """The full identity of a built index: volume content key + every
-    config field that shapes the build. One definition, shared by the
-    resident cache, the disk cache, and the format pass — so they can
-    never disagree about what 'the same index' means."""
-    return (cache_key, word_size, max_kmer_hits, soft_mask, complexity,
-            protein, fold_case)
+def staged_volume(db_dir: str, part: str) -> str:
+    """The directory one staged DB partition lives in."""
+    return os.path.join(db_dir, f"db_part={part}")
+
+
+def read_staged_volume(volume: str) -> list[tuple[str, str]]:
+    """Executor-side load of one staged volume
+    (``{db_dir}/db_part={part}/*.parquet``) -> [(sid, seq)...].
+
+    This is the reference's "volume files on local disk" model
+    (doc/USERGUIDE:224-264): the database is staged to shared storage
+    once by a distributed write, and each worker reads only the volume
+    it is about to search — the driver never holds subject rows."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(_glob.glob(os.path.join(volume, "*.parquet")))
+    if not files:
+        raise FileNotFoundError(f"no staged volume at {volume}")
+    out: list[tuple[str, str]] = []
+    for f in files:
+        t = pq.read_table(f, columns=["sid", "seq"])
+        out.extend(zip(t.column("sid").to_pylist(), t.column("seq").to_pylist()))
+    return out
+
+
+def index_cache_key(volume: str, cfg: BlastConfig) -> tuple:
+    """The full identity of a built index: the staged volume dir plus
+    every config field that shapes the build, in SubjectIndex's
+    positional order. The only place those fields are read — the
+    resident cache, the disk cache, the format pass and the build all
+    go through this key, so they can never disagree about what 'the
+    same index' means. The volume dir is unique by itself: a
+    content-keyed dir holds one content forever, an anonymous one is a
+    fresh uuid per search (plans/pipeline.py stage_volumes)."""
+    return (volume, cfg.word_size, cfg.max_kmer_hits, cfg.subject_soft_mask,
+            cfg.complexity_filter, cfg.task == "blastp", cfg.mask_fold_case)
 
 
 def index_cache_path(key: tuple) -> str | None:
@@ -801,28 +831,13 @@ def _publish_index(idx: SubjectIndex, path: str) -> None:
         pass        # cache is an optimization, never a failure
 
 
-def ensure_index_on_disk(cache_key: str, loader, word_size: int,
-                         max_kmer_hits: int, soft_mask: bool = False,
-                         complexity: bool = False, protein: bool = False,
-                         fold_case: bool = False) -> bool:
-    """The makeblastdb analog, explicit: build ONE volume's index and
-    publish the content-keyed pickle — called by the format pass (one
-    task per missing volume) BEFORE the kernel stage, so search tasks
-    only ever unpickle. Without this, a cold run had every worker that
-    first touched a volume build it concurrently (the publish race is
-    harmless for correctness but quadratic in wall: workers x O(volume)
-    builds — measured 277 s vs ~30 s at the synthesized sf1.0). Lazy
-    derived arrays (protein concat encoding, bucket-bound views) are
-    materialized before publishing so loaders skip those rebuilds too.
-    Does NOT touch the capacity-1 resident cache. Returns True if it
-    built, False if the pickle already existed (or no usable cache
-    dir)."""
-    key = index_cache_key(cache_key, word_size, max_kmer_hits,
-                          soft_mask, complexity, protein, fold_case)
-    path = index_cache_path(key)
-    if path is None or os.path.exists(path):
-        return False
-    idx = SubjectIndex(loader(), word_size, max_kmer_hits,
+def build_index(key: tuple) -> SubjectIndex:
+    """Read the key's staged volume and index it, with the derived
+    arrays the kernel reads (concatenated encoding, bucket-bound
+    views) materialized up front — so a published pickle carries them
+    and its loaders skip those rebuilds too."""
+    volume, k, max_kmer_hits, soft_mask, complexity, protein, fold_case = key
+    idx = SubjectIndex(read_staged_volume(volume), k, max_kmer_hits,
                        soft_mask=soft_mask, complexity=complexity,
                        protein=protein, fold_case=fold_case)
     if protein:
@@ -830,53 +845,57 @@ def ensure_index_on_disk(cache_key: str, loader, word_size: int,
     else:
         idx.cat_nucl
     idx.bucket_bounds_np, idx.sis_np, idx.poss_np
-    _publish_index(idx, path)
+    return idx
+
+
+def format_index(volume: str, cfg: BlastConfig) -> bool:
+    """The makeblastdb analog, explicit: build ONE volume's index and
+    publish its pickle unless it is already there — one task of the
+    format pass (plans/pipeline.py _format_volumes), which runs before
+    the kernel stage so search tasks only ever unpickle. Leaves the
+    resident cache alone. Returns True if it built, False if the pickle
+    already existed (or no usable cache dir)."""
+    key = index_cache_key(volume, cfg)
+    path = index_cache_path(key)
+    if path is None or os.path.exists(path):
+        return False
+    _publish_index(build_index(key), path)
     return True
 
 
-def get_subject_index_lazy(cache_key: str, loader, word_size: int,
-                           max_kmer_hits: int, soft_mask: bool = False,
-                           complexity: bool = False, protein: bool = False,
-                           fold_case: bool = False,
-                           disk_cache: bool = False) -> SubjectIndex:
-    """Same cache, but subjects come from a zero-arg ``loader`` that is
-    only invoked on a miss — so the lazy staged-volume path pays the
-    read+index cost once per worker per partition.
+def load_index(volume: str, cfg: BlastConfig, persist: bool) -> SubjectIndex:
+    """The kernel's subject index for one staged volume: the resident
+    one if this worker holds it, else the published pickle, else a
+    fresh build — so the staged volume is read and indexed at most
+    once per worker per volume (S7 DB-handle reuse,
+    mrblast.cpp:838-845; one volume resident at a time, like the
+    reference).
 
-    disk_cache=True additionally persists the BUILT index to a
-    content-keyed pickle under the scratch dir — the makeblastdb
-    analog: the reference formats the database once on disk and every
-    rank opens the preformatted volume (doc/USERGUIDE:224-264) instead
-    of re-indexing raw FASTA per process. Here the first worker to
-    touch a volume builds and publishes (atomic os.replace, last
-    writer wins, corrupt/stale files rebuild silently); every other
-    worker process — and every LATER process on the box — loads numpy
-    arrays instead of re-hashing the volume. Callers enable it only
-    for content-addressed keys (a nonce-keyed index can never be hit
-    again, so persisting it would only leak scratch space); the key is
-    salted with KERNEL_SPEC so a kernel upgrade invalidates pickles
-    from older code."""
-    key = index_cache_key(cache_key, word_size, max_kmer_hits,
-                          soft_mask, complexity, protein, fold_case)
+    ``persist`` (content-keyed volumes only) adds the disk tier — the
+    makeblastdb analog: the reference formats the database once on
+    disk and every rank opens the preformatted volume
+    (doc/USERGUIDE:224-264). A worker that builds publishes the pickle
+    (atomic os.replace, last writer wins, corrupt files rebuild
+    silently); every other worker process, and every later process on
+    the box, unpickles numpy arrays instead of re-hashing the volume.
+    An anonymous volume is never searched again, so persisting its
+    index would only leak scratch space."""
+    key = index_cache_key(volume, cfg)
     idx = _DB_CACHE.get(key)
     if idx is None:
-        path = None
-        if disk_cache:
+        path = index_cache_path(key) if persist else None
+        if path is not None:
             import pickle
-            path = index_cache_path(key)
-            if path is not None:
-                try:
-                    with open(path, "rb") as fh:
-                        idx = pickle.load(fh)
-                except Exception:
-                    idx = None
+            try:
+                with open(path, "rb") as fh:
+                    idx = pickle.load(fh)
+            except Exception:
+                idx = None
         if idx is None:
-            idx = SubjectIndex(loader(), word_size, max_kmer_hits,
-                               soft_mask=soft_mask, complexity=complexity,
-                               protein=protein, fold_case=fold_case)
+            idx = build_index(key)
             if path is not None:
                 _publish_index(idx, path)
-        _DB_CACHE.clear()      # one partition resident at a time, like the ref
+        _DB_CACHE.clear()
         _DB_CACHE[key] = idx
     return idx
 
@@ -1755,7 +1774,7 @@ def align_block(items, index: SubjectIndex, cfg: BlastConfig,
         raise ValueError(
             f"config word_size={cfg.word_size} does not match the subject "
             f"index's word_size={index.word_size}; rebuild the index with "
-            f"the config's k (stage gen keys on word_size for this reason)")
+            f"the config's k (index_cache_key includes word_size)")
     qitems = [(int(qid), seq) for qid, seq in items]
     if cfg.task == "blastp":
         cols = _align_block_protein_batched(qitems, index, cfg)
@@ -1764,52 +1783,17 @@ def align_block(items, index: SubjectIndex, cfg: BlastConfig,
     return pd.DataFrame(cols, columns=[f.name for f in RAW_HITS.fields])
 
 
-def read_staged_part(db_dir: str, part: str) -> list[tuple[str, str]]:
-    """Executor-side load of one staged DB partition:
-    ``{db_dir}/db_part={part}/*.parquet`` -> [(sid, seq)...].
-
-    This is the reference's "volume files on local disk" model
-    (doc/USERGUIDE:224-264): the database is staged to shared storage
-    once by a distributed write, and each worker reads only the volume
-    it is about to search — the driver never holds subject rows."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(_glob.glob(os.path.join(db_dir, f"db_part={part}", "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no staged volume at {db_dir}/db_part={part}")
-    out: list[tuple[str, str]] = []
-    for f in files:
-        t = pq.read_table(f, columns=["sid", "seq"])
-        out.extend(zip(t.column("sid").to_pylist(), t.column("seq").to_pylist()))
-    return out
-
-
-def make_lazy_block_kernel(db_dir: str, cfg: BlastConfig, gen: str,
-                           disk_cache: bool = False):
+def make_lazy_block_kernel(db_dir: str, cfg: BlastConfig, persist: bool):
     """Kernel factory for the cogrouped work-item plan: one invocation
     per (query block x db_part) group. The group's ``db_part`` column
-    names the staged volume; the subject index is built on first touch
-    and reused across blocks of the same partition via the per-worker
-    cache (S7 DB-handle reuse, mrblast.cpp:838-845), keyed by ``gen``
-    so a restaged database can never hit a stale index. Callers with a
-    CONTENT-addressed gen pass disk_cache=True to also persist built
-    indexes on scratch disk (the makeblastdb analog — see
-    get_subject_index_lazy)."""
+    names the staged volume; its subject index comes from load_index,
+    built on first touch and reused across blocks of the same volume
+    (S7 DB-handle reuse, mrblast.cpp:838-845). ``persist`` is True for
+    content-keyed volumes, whose indexes also live on scratch disk."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = str(pdf["db_part"].iat[0])
-        index = get_subject_index_lazy(
-            f"{db_dir}:{part}:{gen}",
-            lambda: read_staged_part(db_dir, part),
-            cfg.word_size, cfg.max_kmer_hits,
-            soft_mask=cfg.subject_soft_mask,
-            complexity=cfg.complexity_filter,
-            protein=cfg.task == "blastp",
-            fold_case=cfg.mask_fold_case,
-            disk_cache=disk_cache)
-        return align_block(zip(pdf["qid"].to_numpy(),
-                               pdf["seq"].to_numpy()), index, cfg)
+        volume = staged_volume(db_dir, str(pdf["db_part"].iat[0]))
+        return align_block(zip(pdf["qid"].to_numpy(), pdf["seq"].to_numpy()),
+                           load_index(volume, cfg, persist), cfg)
     return kernel
 
 

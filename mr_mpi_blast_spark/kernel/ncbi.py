@@ -13,8 +13,9 @@ the binary.
 Faithful semantics:
 - ``-dbsize`` is always passed with the WHOLE database's residue count
   (S8, mrblast.cpp:404-433) so per-partition e-values are comparable;
-- the per-worker makeblastdb result is cached by partition cache_key
-  (S7 DB-handle reuse, mrblast.cpp:838-845);
+- the per-worker makeblastdb result is cached by staged volume dir
+  (S7 DB-handle reuse, mrblast.cpp:838-845) — unique per search, since
+  stage_volumes writes each unkeyed database to a fresh uuid dir;
 - evalue threshold (F1) and word size pass through as CLI options
   exactly like the reference forwards its BLAST options
   (doc/USERGUIDE:46-66).
@@ -23,7 +24,6 @@ Faithful semantics:
 from __future__ import annotations
 
 import io
-import itertools
 import os
 import shutil
 import subprocess
@@ -37,6 +37,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from mr_mpi_blast_spark.config import BlastConfig
+from mr_mpi_blast_spark.kernel.builtin import read_staged_volume, staged_volume
 
 # -outfmt '6 std qlen': the 12 standard columns plus query length
 OUTFMT6_COLS = ["qid", "sid", "pident", "length", "mismatch", "gapopen",
@@ -60,12 +61,6 @@ NCBI_HITS = StructType([
 ])
 
 _DB_CACHE: dict = {}
-
-# monotone id appended to cache_key: a same-named db_part from a later
-# run with different subject content must not hit a stale makeblastdb
-# result (mirrors pipeline.py's _BROADCAST_GEN guard for the builtin
-# kernel's index cache).
-_NCBI_GEN = itertools.count()
 
 
 def available(task: str = "blastn") -> bool:
@@ -111,29 +106,27 @@ def to_canonical(hits: DataFrame, classifier: bool = False) -> DataFrame:
     return base
 
 
-def _ensure_db(cache_key: str, loader, task: str) -> str:
-    """makeblastdb once per worker per partition (S7 analog). ``loader``
-    is a zero-arg callable yielding [(sid, seq)...] — only invoked on a
-    cache miss, so staged-volume reads happen once per worker."""
-    path = _DB_CACHE.get(cache_key)
+def _ensure_db(volume: str, task: str) -> str:
+    """makeblastdb once per worker per staged volume (S7 analog); the
+    volume is only read on a cache miss."""
+    path = _DB_CACHE.get(volume)
     if path and os.path.exists(path + ".ndb") or path and os.path.exists(path + ".pdb"):
         return path
     dbtype = "nucl" if task == "blastn" else "prot"
     d = tempfile.mkdtemp(prefix="ncbi_db_")
     fasta = os.path.join(d, "db.fa")
     with open(fasta, "w") as f:
-        for sid, seq in loader():
+        for sid, seq in read_staged_volume(volume):
             f.write(f">{sid}\n{seq}\n")
     db = os.path.join(d, "db")
     subprocess.run(["makeblastdb", "-in", fasta, "-dbtype", dbtype,
                     "-out", db], check=True, capture_output=True)
     _DB_CACHE.clear()
-    _DB_CACHE[cache_key] = db
+    _DB_CACHE[volume] = db
     return db
 
 
-def make_ncbi_block_kernel(db_dir: str, cfg: BlastConfig, gen: str,
-                           dbsize: int):
+def make_ncbi_block_kernel(db_dir: str, cfg: BlastConfig, dbsize: int):
     """Kernel factory for the (block x db_part) work-item groups — same
     seam as kernel.builtin.make_lazy_block_kernel, NCBI subprocess
     inside: the group's staged volume is read executor-side and fed to
@@ -141,10 +134,8 @@ def make_ncbi_block_kernel(db_dir: str, cfg: BlastConfig, gen: str,
     task = cfg.task
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        from mr_mpi_blast_spark.kernel.builtin import read_staged_part
-        part = str(pdf["db_part"].iat[0])
-        db = _ensure_db(f"{db_dir}:{part}:{gen}",
-                        lambda: read_staged_part(db_dir, part), task)
+        db = _ensure_db(staged_volume(db_dir, str(pdf["db_part"].iat[0])),
+                        task)
         with tempfile.NamedTemporaryFile("w", suffix=".fa", delete=False) as f:
             for qid, seq in zip(pdf["qid"], pdf["seq"]):
                 f.write(f">{qid}\n{seq}\n")
@@ -205,8 +196,7 @@ def run_search_ncbi(queries: DataFrame, subjects: DataFrame,
     db_dir, residues, _n_seqs = stage_volumes(subjects)
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     work = blocked.crossJoin(F.broadcast(staged_parts(queries.sparkSession, db_dir)))
-    kernel = make_ncbi_block_kernel(
-        db_dir, cfg, gen=str(next(_NCBI_GEN)), dbsize=dbsize)
+    kernel = make_ncbi_block_kernel(db_dir, cfg, dbsize=dbsize)
     raw = work.groupBy("block_id", "db_part").applyInPandas(
         kernel, schema=NCBI_HITS)
     hits = to_canonical(raw, classifier=cfg.is_classifier)

@@ -29,14 +29,13 @@ reference's work-item model (mrblast.cpp:199-222). The database moves
 driver-free: one distributed partitionBy write, then each executor
 reads only the volumes its groups touch (page-cache/local-disk warm on
 re-reads, bounded to one resident index per worker). On a cluster,
-``scratch_dir`` must point at shared storage (HDFS/S3/NFS); default is
-a driver-local temp dir, correct for local[*].
+``SPARK_GRAFT_SCRATCH`` must point at shared storage (HDFS/S3/NFS);
+the default is the driver-local temp dir, correct for local[*].
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
 import tempfile
@@ -50,10 +49,6 @@ from mr_mpi_blast_spark.functions.projections import project_hits, subject_displ
 from mr_mpi_blast_spark.kernel.builtin import RAW_HITS, make_lazy_block_kernel
 from mr_mpi_blast_spark.operators.blocks import assign_blocks
 from mr_mpi_blast_spark.operators.topk import top_hits, topk_per_key
-
-# monotone id so executor-side index caches key on partition CONTENT
-# (a same-named partition from a different run must not hit a stale index)
-_BROADCAST_GEN = itertools.count()
 
 
 def effective_dbsize(subjects: DataFrame, cfg: BlastConfig) -> int:
@@ -80,7 +75,7 @@ def staged_volume_dir(cache_key: str) -> str:
         "spark_graft_volumes", digest)
 
 
-def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
+def stage_volumes(subjects: DataFrame,
                   cache_key: str | None = None) -> tuple[str, int, int]:
     """Distributed write of the database as one directory per db_part
     (the reference's makeblastdb volume staging, doc/USERGUIDE:224-264).
@@ -93,10 +88,13 @@ def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
     AND freshness, e.g. path+mtime+size) enabling makeblastdb-style
     reuse — if the key's volume dir is already fully staged (_SUCCESS
     + meta sidecar present), the write is skipped entirely. The
-    reference never re-formats volumes per search; neither do we."""
+    reference never re-formats volumes per search; neither do we.
+    Without a key the volumes go to a fresh uuid-named dir, so either
+    way the staged dir names one content for good — the identity the
+    subject-index caches key on (kernel/builtin.py index_cache_key)."""
     from pyspark.sql import Observation
 
-    if cache_key is not None and scratch_dir is None:
+    if cache_key is not None:
         db_dir = staged_volume_dir(cache_key)
         meta_p = os.path.join(db_dir, _STAGE_META)
         if (os.path.exists(os.path.join(db_dir, "_SUCCESS"))
@@ -105,7 +103,7 @@ def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
                 meta = json.load(fh)
             return db_dir, int(meta["residues"]), int(meta["n_seqs"])
     else:
-        db_dir = scratch_dir or os.path.join(
+        db_dir = os.path.join(
             os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir()),
             f"blast_db_{uuid.uuid4().hex[:12]}")
 
@@ -120,7 +118,7 @@ def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
      .repartition(F.col("db_part"))
      .write.mode("overwrite").partitionBy("db_part").parquet(db_dir))
     residues, n_seqs = int(obs.get["residues"]), int(obs.get["n_seqs"])
-    if cache_key is not None and scratch_dir is None:
+    if cache_key is not None:
         # meta written AFTER _SUCCESS: reuse requires both, so a
         # concurrent reader never sees a half-staged dir as complete.
         with open(os.path.join(db_dir, _STAGE_META), "w") as fh:
@@ -266,42 +264,40 @@ def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
             .select("db_part", "block_id").distinct())
 
 
-def _format_volumes(parts_df: DataFrame, db_dir: str, cfg: BlastConfig,
-                    gen: str) -> None:
-    """The makeblastdb pass: ONE task per volume whose content-keyed
-    index pickle is missing builds it and publishes to scratch disk,
-    BEFORE the kernel stage — so search tasks only ever unpickle
-    (~1 s) instead of racing O(volume)-cost builds. The reference
-    formats the database once (doc/USERGUIDE:224-264) and every rank
-    opens the preformatted volume; without this separation a cold run
-    had every worker that first touched a volume build it concurrently
-    — workers x volumes x O(volume) wall, measured 277 s -> ~30 s at
-    the synthesized sf1.0 (10x documents). Driver traffic is the
-    volume NAME list (metadata-sized). Warm-run skip: on a local[*]
-    master the driver and the executors share one filesystem, so a
-    driver-side pickle-presence sweep can skip the job entirely; on
-    any OTHER master that check is wrong in both directions (driver
+def _format_volumes(parts_df: DataFrame, db_dir: str,
+                    cfg: BlastConfig) -> None:
+    """The makeblastdb pass over content-keyed volumes: ONE task per
+    volume whose index pickle is missing builds it and publishes to
+    scratch disk, BEFORE the kernel stage — so search tasks only ever
+    unpickle (~1 s) instead of racing O(volume)-cost builds. The
+    reference formats the database once (doc/USERGUIDE:224-264) and
+    every rank opens the preformatted volume; without this separation
+    a cold run had every worker that first touched a volume build it
+    concurrently — workers x volumes x O(volume) wall, measured 277 s
+    -> ~30 s at the synthesized sf1.0 (10x documents). Driver traffic
+    is the volume NAME list (metadata-sized). Warm-run skip: on a
+    local[*] master the driver and the executors share one filesystem,
+    so a driver-side pickle-presence sweep can skip the job entirely;
+    on any OTHER master that check is wrong in both directions (driver
     has the pickle -> formatting skipped and workers race concurrent
     builds again; driver lacks it -> only the executor that ran the
     format task is warmed), so the job is ALWAYS submitted over all
     volumes and each task no-ops executor-locally on a present pickle
-    (``ensure_index_on_disk`` checks before building) — one
-    metadata-cost task per volume on a warm cluster."""
+    (``format_index`` checks before building) — one metadata-cost task
+    per volume on a warm cluster."""
     import pandas as pd
 
-    from mr_mpi_blast_spark.kernel.builtin import (ensure_index_on_disk,
+    from mr_mpi_blast_spark.kernel.builtin import (format_index,
                                                    index_cache_key,
                                                    index_cache_path,
-                                                   read_staged_part)
+                                                   staged_volume)
     parts = [str(r["db_part"]) for r in parts_df.collect()]
     missing = parts
     if parts_df.sparkSession.sparkContext.master.startswith("local"):
         missing = []
         for p in parts:
-            ip = index_cache_path(index_cache_key(
-                f"{db_dir}:{p}:{gen}", cfg.word_size, cfg.max_kmer_hits,
-                cfg.subject_soft_mask, cfg.complexity_filter,
-                cfg.task == "blastp", cfg.mask_fold_case))
+            ip = index_cache_path(index_cache_key(staged_volume(db_dir, p),
+                                                  cfg))
             if ip is None:
                 return          # no usable cache dir: nothing to format
             if not os.path.exists(ip):
@@ -309,17 +305,9 @@ def _format_volumes(parts_df: DataFrame, db_dir: str, cfg: BlastConfig,
     if not missing:
         return
 
-    word_size, max_kmer_hits = cfg.word_size, cfg.max_kmer_hits
-    soft_mask, complexity = cfg.subject_soft_mask, cfg.complexity_filter
-    protein, fold_case = cfg.task == "blastp", cfg.mask_fold_case
-
     def _fmt(pdf: pd.DataFrame) -> pd.DataFrame:
         part = str(pdf["db_part"].iat[0])
-        built = ensure_index_on_disk(
-            f"{db_dir}:{part}:{gen}",
-            lambda: read_staged_part(db_dir, part),
-            word_size, max_kmer_hits, soft_mask=soft_mask,
-            complexity=complexity, protein=protein, fold_case=fold_case)
+        built = format_index(staged_volume(db_dir, part), cfg)
         return pd.DataFrame({"db_part": [part], "built": [built]})
 
     (parts_df.filter(F.col("db_part").isin(missing))
@@ -330,22 +318,24 @@ def _format_volumes(parts_df: DataFrame, db_dir: str, cfg: BlastConfig,
 
 def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                    cfg: BlastConfig | None = None,
-                   scratch_dir: str | None = None,
                    log_dir: str | None = None,
                    cache_key: str | None = None,
-                   seed_prune: bool = True) -> tuple[DataFrame, int]:
+                   ) -> tuple[DataFrame, int, int]:
     """The kernel stage alone: (raw RAW_HITS DataFrame, whole-db residue
-    count). Split from run_search so the relational tail (P3-P9 + F1 +
-    O2/O3) can be re-derived — and oracle-checked — from persisted raw
-    output. RAW_HITS is all integers/strings, so persisting it is
-    lossless across engines.
+    count, sequence count). Split from run_search so the relational
+    tail (P3-P9 + F1 + O2/O3) can be re-derived — and oracle-checked —
+    from persisted raw output. RAW_HITS is all integers/strings, so
+    persisting it is lossless across engines.
 
     ``cache_key`` flows to stage_volumes (makeblastdb-style volume
-    reuse) and keys the per-worker subject-index cache on CONTENT
-    instead of a per-run nonce — so a session running several searches
-    against the same database rebuilds each volume's index once, the
-    reference's resident-DB-handle model (mrblast.cpp:838-845) held
-    across whole runs, not just map calls."""
+    reuse), and its content-keyed volumes get a format pass and
+    indexes persisted on scratch disk — so a session running several
+    searches against the same database builds each volume's index
+    once, the reference's resident-DB-handle model
+    (mrblast.cpp:838-845) held across whole runs, not just map calls.
+    Work items with no possible exact-seed overlap are skipped (the
+    runtime filter above) unless cfg.threshold is set or the
+    saturation gate finds the volume filters too full to prune."""
     cfg = cfg or BlastConfig()
 
     # P2 once on the dimension side, before the kernel sees subjects
@@ -354,8 +344,7 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
 
     blocked = assign_blocks(queries, cfg.block_size).select("block_id", "qid", "seq")
 
-    db_dir, residues, count = stage_volumes(subjects, scratch_dir,
-                                            cache_key=cache_key)
+    db_dir, residues, count = stage_volumes(subjects, cache_key=cache_key)
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     n_seqs = cfg.n_seqs if cfg.n_seqs is not None else count
     # J1 work items: every block against every partition. Only the
@@ -363,7 +352,7 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
     # listing); broadcast keeps the blocked side's partitioning.
     parts_df = staged_parts(blocked.sparkSession, db_dir)
     work = blocked.crossJoin(F.broadcast(parts_df))
-    if seed_prune and cfg.threshold is None:
+    if cfg.threshold is None:
         # the runtime filter (see module section above): keep only
         # (block, volume) pairs with possible exact-seed overlap.
         # Silently a no-op under blastp -threshold (neighborhood
@@ -395,23 +384,12 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
     # required distribution, so no second exchange is planned.
     target = blocked.sparkSession.sparkContext.defaultParallelism
     work = work.repartition(target, F.col("db_part"), F.col("block_id"))
-    if cache_key is not None:
-        # content-addressed volumes are immutable, so the index cache
-        # can key on (volume content, index-shaping cfg fields) and hit
-        # across independent jobs in the same session. Only the fields
-        # that change the built index participate.
-        gen = hashlib.md5("|".join(map(str, (
-            cache_key, cfg.word_size, cfg.max_kmer_hits,
-            cfg.subject_soft_mask, cfg.complexity_filter, cfg.task,
-            cfg.mask_fold_case))).encode()).hexdigest()[:12]
-    else:
-        gen = str(next(_BROADCAST_GEN))
-    # content-addressed gen -> persist built indexes on scratch disk
-    # (the makeblastdb analog; a nonce gen can never be hit again)
-    if cache_key is not None:
-        _format_volumes(parts_df, db_dir, cfg, gen)
-    kernel = make_lazy_block_kernel(db_dir, cfg, gen=gen,
-                                    disk_cache=cache_key is not None)
+    # content-keyed volumes are searched again, so their indexes are
+    # formatted up front and persisted; an anonymous staging is not
+    persist = cache_key is not None
+    if persist:
+        _format_volumes(parts_df, db_dir, cfg)
+    kernel = make_lazy_block_kernel(db_dir, cfg, persist)
     if log_dir:
         # W7: per-rank timing log (TIMING=1 analog, mrblast.cpp:900-935)
         from mr_mpi_blast_spark.runlog import timed_kernel
@@ -486,23 +464,17 @@ def apply_max_target_seqs(hits: DataFrame, cap: int,
 
 def run_search(queries: DataFrame, subjects: DataFrame,
                cfg: BlastConfig | None = None,
-               scratch_dir: str | None = None,
                log_dir: str | None = None,
-               cache_key: str | None = None,
-               seed_prune: bool = True) -> DataFrame:
+               cache_key: str | None = None) -> DataFrame:
     """queries(qid, seq, ...) x subjects(sid|defline, db_part, seq)
     -> canonical HITS DataFrame. log_dir enables the reference's
-    TIMING per-rank log files (runlog.py). seed_prune (DEFAULT ON,
-    r12) skips work items with zero possible seed overlap —
-    value-identical output by construction (one-sided Bloom, both
-    strands probed), a no-op under saturation and under blastp
-    -threshold, and its cold cost is one metadata-sized aggregate per
-    volume; pass False to force the full work-item set (the escape
-    hatch, e.g. for an A/B parity replay)."""
+    TIMING per-rank log files (runlog.py); cache_key is
+    run_kernel_raw's content key. The seed-overlap work-item filter
+    (run_kernel_raw) is value-identical by construction (one-sided
+    Bloom, both strands probed)."""
     cfg = cfg or BlastConfig()
-    raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg, scratch_dir,
-                                         log_dir=log_dir, cache_key=cache_key,
-                                         seed_prune=seed_prune)
+    raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg,
+                                         log_dir=log_dir, cache_key=cache_key)
     return search_from_raw(raw, dbsize, n_seqs, cfg)
 
 

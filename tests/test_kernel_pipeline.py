@@ -7,6 +7,7 @@ and assert the hit table facts (coords 1-based inclusive, strand swap,
 identity, e-value normalization against WHOLE dbsize)."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -179,56 +180,158 @@ def test_max_target_seqs_cap(spark):
     assert capped.select("sid").distinct().count() == 1
 
 
+def _stage_volume_files(root, rows):
+    """Write one staged volume (the layout stage_volumes leaves) without
+    Spark; returns its dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mr_mpi_blast_spark.kernel.builtin import staged_volume
+    vol = staged_volume(str(root), "v0")
+    os.makedirs(vol)
+    pq.write_table(pa.table({"sid": [r[0] for r in rows],
+                             "seq": [r[1] for r in rows]}),
+                   os.path.join(vol, "part-00000.parquet"))
+    return vol
+
+
 def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
-    """makeblastdb analog: a content-keyed built index persists to
-    scratch disk and a fresh in-memory cache loads it WITHOUT invoking
-    the subject loader; a corrupt pickle rebuilds silently."""
+    """makeblastdb analog: a persisted index loads into a fresh
+    resident cache WITHOUT reading the staged volume; a corrupt pickle
+    rebuilds silently; the non-persisting path writes nothing; the
+    format pass builds a missing pickle once and skips a present one."""
     from mr_mpi_blast_spark.kernel import builtin as B
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     subjects = [("s1", "ACGTACGTACGTACGTAC"), ("s2", "TTTTACGTACGTACGTAAAA")]
-    calls = {"n": 0}
+    vol = _stage_volume_files(tmp_path / "db1", subjects)
+    reads = []
+    real_read = B.read_staged_volume
 
-    def loader():
-        calls["n"] += 1
-        return list(subjects)
+    def counting_read(volume):
+        reads.append(volume)
+        return real_read(volume)
+
+    monkeypatch.setattr(B, "read_staged_volume", counting_read)
+    cfg = B.BlastConfig(word_size=8, max_kmer_hits=64)
 
     B._DB_CACHE.clear()
-    idx1 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
-    assert calls["n"] == 1
-    import os as _os
-    cache_dir = tmp_path / f"spark_graft_idx_cache_{_os.getuid()}"
+    idx1 = B.load_index(vol, cfg, persist=True)
+    assert reads == [vol]
+    cache_dir = tmp_path / f"spark_graft_idx_cache_{os.getuid()}"
     pkls = list(cache_dir.glob("*.pkl"))
     assert len(pkls) == 1
+    assert B.load_index(vol, cfg, persist=True) is idx1   # resident hit
 
     # fresh process simulation: empty in-memory cache -> disk hit,
-    # loader NOT invoked, identical search results
+    # volume NOT read, identical search results
     B._DB_CACHE.clear()
-    idx2 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
-    assert calls["n"] == 1
-    cfg = B.BlastConfig(word_size=8)   # must match the index's k
+    idx2 = B.load_index(vol, cfg, persist=True)
+    assert idx2 is not idx1 and len(reads) == 1
     q = ("ACGTACGTACGTACGT")
     h1 = B.align_block([(1, q)], idx1, cfg)
     h2 = B.align_block([(1, q)], idx2, cfg)
     assert h1.equals(h2)
     assert len(h1)  # the query does hit
+    assert not B.format_index(vol, cfg) and len(reads) == 1
 
     # corrupt pickle -> silent rebuild (cache is never a failure mode)
     pkls[0].write_bytes(b"not a pickle")
     B._DB_CACHE.clear()
-    idx3 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
-    assert calls["n"] == 2
+    idx3 = B.load_index(vol, cfg, persist=True)
+    assert len(reads) == 2
     assert B.align_block([(1, q)], idx3, cfg).equals(h1)
 
-    # nonce-keyed callers never touch disk
-    B._DB_CACHE.clear()
-    B.get_subject_index_lazy("ck:v0:nonce", loader, 8, 64,
-                             disk_cache=False)
+    # anonymous volumes never touch disk; same db_part name, other
+    # content -> other index
+    other = _stage_volume_files(tmp_path / "db2", [("s9", "GGGGCCCCGGGGCCCC")])
+    idx4 = B.load_index(other, cfg, persist=False)
+    assert reads[-1] == other and idx4.sids_np.tolist() == ["s9"]
     assert sorted(cache_dir.glob("*.pkl")) == pkls
+
+    # the format pass publishes a missing pickle exactly once
+    third = _stage_volume_files(tmp_path / "db3", subjects)
+    assert B.format_index(third, cfg)
+    assert len(list(cache_dir.glob("*.pkl"))) == 2
+    assert not B.format_index(third, cfg)
     B._DB_CACHE.clear()
+
+
+def _one_volume_db(spark, sid, seq):
+    return spark.createDataFrame(
+        [(sid, sid, "db.00", seq, len(seq))],
+        "sid string, defline string, db_part string, seq string, "
+        "length int")
+
+
+def _two_dbs_one_volume_name(spark):
+    """One query and two single-volume databases that share the
+    volume name db.00 but hold different planted copies of it."""
+    q = _seq(300, salt=51)
+    queries = spark.createDataFrame(
+        [(1, "q1", "q1", q, len(q))],
+        "qid long, defline string, defline_part string, seq string, "
+        "length int")
+    db_a = _one_volume_db(spark, "s_a",
+                          _seq(40, salt=52) + q[20:200] + _seq(40, salt=53))
+    db_b = _one_volume_db(spark, "s_b",
+                          _seq(70, salt=54) + q[100:280] + _seq(30, salt=55))
+    return queries, db_a, db_b
+
+
+def _hit_rows(df):
+    return sorted(map(tuple, df.select("sid", "qstart", "qend", "sstart",
+                                       "send").collect()))
+
+
+def test_unkeyed_searches_with_same_volume_names_never_share_an_index(spark):
+    """Two uncached searches in one session stage different subjects
+    under the same db_part name. Each stages to its own uuid dir, the
+    index's identity, so the second search may not be served the
+    first one's resident index."""
+    queries, db_a, db_b = _two_dbs_one_volume_name(spark)
+    cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
+    a = _hit_rows(run_search(queries, db_a, cfg))
+    b = _hit_rows(run_search(queries, db_b, cfg))
+    assert a and {r[0] for r in a} == {"s_a"}
+    assert b and {r[0] for r in b} == {"s_b"}
+    assert a[0][1:] == (21, 200, 41, 220)
+    assert b[0][1:] == (101, 280, 71, 250)
+
+
+def test_keyed_searches_with_same_volume_names_never_share_an_index(spark):
+    """Same as the unkeyed case for two content keys: each key stages,
+    formats and persists its own volumes, and searching the first key
+    again after the second still returns the first database's hits."""
+    import glob
+    import shutil
+    import uuid
+
+    from mr_mpi_blast_spark.kernel.builtin import (index_cache_key,
+                                                   index_cache_path,
+                                                   staged_volume)
+    from mr_mpi_blast_spark.plans.pipeline import staged_volume_dir
+
+    queries, db_a, db_b = _two_dbs_one_volume_name(spark)
+    cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
+    tag = uuid.uuid4().hex
+    key_a, key_b = f"test-db-a-{tag}", f"test-db-b-{tag}"
+    try:
+        a = _hit_rows(run_search(queries, db_a, cfg, cache_key=key_a))
+        b = _hit_rows(run_search(queries, db_b, cfg, cache_key=key_b))
+        a_again = _hit_rows(run_search(queries, db_a, cfg, cache_key=key_a))
+        assert a and {r[0] for r in a} == {"s_a"}
+        assert b and {r[0] for r in b} == {"s_b"}
+        assert a_again == a
+    finally:
+        for key in (key_a, key_b):
+            d = staged_volume_dir(key)
+            ip = index_cache_path(index_cache_key(staged_volume(d, "db.00"),
+                                                  cfg))
+            if ip is not None and os.path.exists(ip):
+                os.remove(ip)
+            for p in [d] + glob.glob(f"{d}_seedbloom*"):
+                shutil.rmtree(p, ignore_errors=True)
 
 
 def test_raw_cache_keys_distinct_per_config_and_subset():
@@ -364,25 +467,35 @@ def test_flagship_tail_plan_single_exchange(spark):
     assert plan.index("WindowGroupLimit") < plan.index("Exchange")
 
 
-def test_seed_prune_value_identical_on_fixtures(spark, hits):
-    """r11 runtime filter: seed_prune must never change the hit table
+def _full_work_item_run(monkeypatch, *args):
+    """run_search with the seed filter's saturation gate forced shut:
+    every (block, volume) work item runs — the unpruned reference."""
+    import mr_mpi_blast_spark.plans.pipeline as pl
+    with monkeypatch.context() as m:
+        m.setattr(pl, "SEED_PRUNE_MAX_FILL", 0.0)
+        return pl.run_search(*args)
+
+
+def test_seed_prune_value_identical_on_fixtures(spark, hits, monkeypatch):
+    """r11 runtime filter: pruning must never change the hit table
     (one-sided pruning — a pair with any exact shared word always
-    survives). Same fixtures, same cfg, pruned vs unpruned."""
+    survives). Same fixtures, same cfg: the default (pruned) run vs the
+    full work-item run."""
     cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
-    pruned = run_search(_queries(spark), _subjects(spark), cfg,
-                        seed_prune=True)
+    full = _full_work_item_run(monkeypatch, _queries(spark),
+                               _subjects(spark), cfg)
     cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
             "bitscore", "evalue"]
-    got = sorted(tuple(r) for r in pruned.select(*cols).collect())
-    want = sorted(tuple(r) for r in hits.select(*cols).collect())
+    got = sorted(tuple(r) for r in hits.select(*cols).collect())
+    want = sorted(tuple(r) for r in full.select(*cols).collect())
     assert got == want and len(got) > 0
 
 
-def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
+def test_seed_prune_skips_disjoint_volume(spark, tmp_path, monkeypatch):
     """A volume whose alphabet shares no k-mer with the queries is
     skipped entirely (measured skipped-volume count), and the hit
-    table still equals the unpruned run — the fixture the verdict
-    asked for."""
+    table still equals the full work-item run — the fixture the
+    verdict asked for."""
     from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
                                                    stage_volumes,
                                                    volume_seed_blooms)
@@ -407,7 +520,8 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
     assert not any(q[i:i + 11] in s_gc for i in range(len(q) - 10))
     cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
 
-    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "vols"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, _, _ = stage_volumes(subs)
     blocked = queries.selectExpr("0L AS block_id", "qid", "seq")
     blooms = volume_seed_blooms(spark, db_dir, cfg.word_size)
     kept = {(r.db_part, r.block_id)
@@ -416,15 +530,15 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
     assert ("vol.at", 0) in kept
     assert all(p != "vol.gc" for p, _ in kept), kept  # volume skipped
 
-    base = run_search(queries, subs, cfg)
-    pruned = run_search(queries, subs, cfg, seed_prune=True)
+    pruned = run_search(queries, subs, cfg)
+    full = _full_work_item_run(monkeypatch, queries, subs, cfg)
     cols = ["qid", "sid", "qstart", "qend", "bitscore"]
     assert sorted(map(tuple, pruned.select(*cols).collect())) \
-        == sorted(map(tuple, base.select(*cols).collect()))
+        == sorted(map(tuple, full.select(*cols).collect()))
     assert pruned.count() > 0
 
 
-def test_seed_prune_keeps_minus_strand_only_block(spark):
+def test_seed_prune_keeps_minus_strand_only_block(spark, monkeypatch):
     """r11 review regression: blastn seeds the query on BOTH strands,
     so a (block, volume) pair whose ONLY homology is a reverse-
     complement copy must survive pruning. The query sits alone in its
@@ -443,16 +557,17 @@ def test_seed_prune_keeps_minus_strand_only_block(spark):
         "sid string, defline string, db_part string, seq string, "
         "length int")
     cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
-    base = run_search(queries, subs, cfg)
-    pruned = run_search(queries, subs, cfg, seed_prune=True)
+    pruned = run_search(queries, subs, cfg)
+    full = _full_work_item_run(monkeypatch, queries, subs, cfg)
     cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
             "bitscore"]
-    want = sorted(map(tuple, base.select(*cols).collect()))
+    want = sorted(map(tuple, full.select(*cols).collect()))
     assert len(want) > 0, "fixture must produce a minus-strand hit"
     assert sorted(map(tuple, pruned.select(*cols).collect())) == want
 
 
-def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path):
+def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path,
+                                                          monkeypatch):
     """The prune probe's plan shape: the volume position table rides a
     BroadcastExchange (bounded at bits rows/volume by construction);
     the query k-mer stream is never shuffled for the membership test
@@ -466,7 +581,8 @@ def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path):
          ("s2", "s2", "v.b", _seq(200, salt=42), 200)],
         "sid string, defline string, db_part string, seq string, "
         "length int")
-    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "v"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, _, _ = stage_volumes(subs)
     blooms = volume_seed_blooms(spark, db_dir, 11)
     blocked = spark.createDataFrame([(0, 1, q)],
                                     "block_id long, qid long, seq string")
@@ -492,8 +608,7 @@ def test_seed_prune_saturation_gate_skips_probe(spark, monkeypatch):
 
     monkeypatch.setattr(pl, "prune_work_items", boom)
     cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
-    out = pl.run_search(_queries(spark), _subjects(spark), cfg,
-                        seed_prune=True)
+    out = pl.run_search(_queries(spark), _subjects(spark), cfg)
     assert out.count() > 0
 
 
@@ -517,5 +632,5 @@ def test_seed_prune_noop_under_neighborhood_seeding(spark, monkeypatch):
         "length int")
     cfg = BlastConfig(task="blastp", threshold=11, word_size=3,
                       evalue=10.0, block_size=400)
-    out = pl.run_search(prot_q, prot_s, cfg, seed_prune=True)
+    out = pl.run_search(prot_q, prot_s, cfg)
     assert out.count() > 0  # ran the FULL work-item set, filter unused

@@ -127,9 +127,8 @@ def test_ncbi_kernel_forwards_masking_flags():
     cfg = dataclasses.replace(
         CFG, dust="20 64 1", soft_masking=True, lcase_masking=True,
         window_size=0, extra_opts=("-num_descriptions", "500"))
-    kernel = ncbi.make_ncbi_block_kernel("/tmp/nowhere", cfg, gen="g",
-                                         dbsize=1000)
-    ncbi._DB_CACHE["/tmp/nowhere:p0:g"] = "/tmp/nowhere/db"
+    kernel = ncbi.make_ncbi_block_kernel("/tmp/nowhere", cfg, dbsize=1000)
+    ncbi._DB_CACHE["/tmp/nowhere/db_part=p0"] = "/tmp/nowhere/db"
     real_run = ncbi.subprocess.run
     real_exists = ncbi.os.path.exists
     ncbi.subprocess.run = fake_run
